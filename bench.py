@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+     "recall": {gate: row}, "sf": ...}
 
 Headline set = the operators that define this engine (ER pipeline, dedup family,
 ANN, CC) plus the relational parity queries. Each query is timed to full
@@ -78,132 +79,16 @@ HEADLINE = [
     "line_dedup_docs",
     "temperature_mixture_docs",
 ]
-# Correctness-gate queries (minhash_recall_gate, which recomputes the exact
-# corpus-wide 3-gram pair set + the LSH pair set purely to compare counts)
-# are deliberately NOT in HEADLINE: their subtrees are already timed above
-# (jaccard_pairs_docs, minhash_near_dup) and re-timing the comparison would
-# double-count ~18s of redundant work. The driver's CORRECTNESS gate runs
-# every queries() entry regardless, so the gate rows stay hash-checked.
-
-
-def recall_gates(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict:
-    """Driver-visible recall of every sketch/approximate operator against its
-    exact counterpart at sf0.01 (small enough that the exact computation is
-    cheap). The sketch outputs are verified subsets of the candidate space, so
-    recall = |approx| / |exact| for the pair operators and top-k overlap for ANN.
-    """
-    from pyspark.sql import functions as F
-
-    from entity_resolution_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_lsh_dup_pairs,
-        simhash_dup_pairs,
-    )
-    from entity_resolution_spark.functions import text as TX
-    from entity_resolution_spark.functions.hashing import hamming64, simhash64, simhash_fold
-    from entity_resolution_spark.operators.similarity import brute_force_topk
-    from entity_resolution_spark.queries import QUERIES as _Q
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out: dict[str, float] = {}
-
-    # MinHash-LSH vs exact 3-gram jaccard at the same verify threshold. Both
-    # paths verify with the exact jaccard on identical shingle sets, so the LSH
-    # output is a subset of the exact set and recall is a pure band-miss rate.
-    approx = minhash_lsh_dup_pairs(docs, shingle_k=3, verify_threshold=0.5)
-    exact = jaccard_pairs(docs, "doc_id", "text", block_col=None,
-                          threshold=0.5, ngram=3)
-    n_exact = exact.count()
-    n_hit = approx.join(exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi").count()
-    out["minhash_near_dup_recall"] = round(n_hit / n_exact, 4) if n_exact else 1.0
-
-    # SimHash banding vs exact Hamming-<=6 over all sketch pairs (the 8x8-bit
-    # band schedule is complete for d < 8, so this asserts 1.0).
-    exploded = docs.select(F.col("doc_id").alias("_id"),
-                           F.explode(TX.distinct_tokens(F.col("text"))).alias("_t"))
-    sketch = exploded.groupBy("_id").agg(*simhash64(F.col("_t"))).select(
-        "_id", simhash_fold().alias("_sim"))
-    a = sketch.select(F.col("_id").alias("id_a"), F.col("_sim").alias("_sa"))
-    b = sketch.select(F.col("_id").alias("id_b"), F.col("_sim").alias("_sb"))
-    exact_sh = (
-        a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-        .where(hamming64(F.col("_sa"), F.col("_sb")) <= 6)
-    )
-    n_exact = exact_sh.count()
-    approx_sh = simhash_dup_pairs(docs, max_hamming=6)
-    n_hit = approx_sh.join(
-        exact_sh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    ).count()
-    out["simhash_near_dup_recall"] = round(n_hit / n_exact, 4) if n_exact else 1.0
-
-    # Hyperplane-LSH ANN vs brute-force cosine top-k: per-probe overlap of the
-    # returned neighbor sets.
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    probes = emb.where(F.col("vec_id") < 20)
-    truth = brute_force_topk(emb, probes, k=5).select("probe_id", "neighbor_id")
-    # same operator + plane/table schedule the driver query runs
-    ann = _Q["lsh_ann_topk"](spark, sf_dir).select("probe_id", "neighbor_id")
-    n_truth = truth.count()
-    n_hit = ann.join(truth, ["probe_id", "neighbor_id"], "left_semi").count()
-    out["lsh_ann_topk_recall"] = round(n_hit / n_truth, 4) if n_truth else 1.0
-
-    # IVF ANN on its honest regime — near-dup retrieval. The sf tables are
-    # isotropic at cosine 0.3-0.5, where ANY cell index degenerates to
-    # recall ≈ scan fraction (measured: 0.94 recall needs 55% scan); real
-    # corpora have high-cosine duplicate structure, so the gate plants it
-    # deterministically: 100 partner vectors at cosine ≈ 0.995 (5% seeded
-    # noise) are unioned into the corpus, and every original must retrieve
-    # its partner in top-5 while scanning n_probe/√N ≈ 9% of the cells.
-    import numpy as _np
-
-    from entity_resolution_spark.operators.similarity import ivf_ann_topk
-
-    base = emb.where(F.col("vec_id") < 100).collect()
-    rng = _np.random.RandomState(0xC0FFEE)
-    planted = [
-        (
-            int(r["vec_id"]) + 1_000_000,
-            [
-                float(x)
-                for x in _np.asarray(r["embedding"])
-                + 0.05
-                * _np.linalg.norm(r["embedding"])
-                / _np.sqrt(len(r["embedding"]))
-                * rng.standard_normal(len(r["embedding"]))
-            ],
-        )
-        for r in base
-    ]
-    corpus = emb.unionByName(
-        spark.createDataFrame(planted, "vec_id long, embedding array<double>")
-    )
-    ivf_probes = corpus.where(F.col("vec_id") < 100)
-    got = {
-        (r["probe_id"], r["neighbor_id"])
-        for r in ivf_ann_topk(corpus, ivf_probes, k=5, n_probe=4).collect()
-    }
-    hits = sum(1 for r in base if (r["vec_id"], r["vec_id"] + 1_000_000) in got)
-    out["ivf_ann_planted_partner_recall"] = round(hits / len(base), 4) if base else 1.0
-
-    # PQ ANN on the same planted-partner regime: every original must retrieve
-    # its cosine≈0.995 partner in top-5 through the quantized screen while
-    # reranking only `rerank` of N candidates exactly.
-    from entity_resolution_spark.operators.similarity import pq_ann_topk
-
-    got_pq = {
-        (r["probe_id"], r["neighbor_id"])
-        for r in pq_ann_topk(
-            corpus, ivf_probes, k=5, m=8, k_codes=32, rerank=64
-        ).collect()
-    }
-    hits_pq = sum(
-        1 for r in base if (r["vec_id"], r["vec_id"] + 1_000_000) in got_pq
-    )
-    out["pq_ann_planted_partner_recall"] = (
-        round(hits_pq / len(base), 4) if base else 1.0
-    )
-    return out
+# Recall of every sketch/approximate operator against its exact counterpart:
+# the oracled gate rows, read at sf0.01 (beside the timed sf dir), where the
+# exact side is cheap. They are not timed: their subtrees re-run operators
+# HEADLINE already times (jaccard_pairs_docs, minhash_near_dup, *_ann_topk).
+RECALL_GATES = [
+    "minhash_recall_gate",
+    "lsh_ann_recall_gate",
+    "ivf_ann_recall_gate",
+    "pq_ann_recall_gate",
+]
 
 
 def main() -> int:
@@ -272,13 +157,14 @@ def main() -> int:
     }
     total = sum(t for t in times.values() if t > 0)
 
-    try:
-        recalls = recall_gates(spark)
-        for k, v in recalls.items():
-            print(f"# recall {k}: {v}", file=sys.stderr)
-    except Exception as e:
-        recalls = {"error": str(e)}
-        print(f"# recall gates ERROR {e}", file=sys.stderr)
+    recall_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    recalls: dict[str, dict] = {}
+    for name in RECALL_GATES:
+        try:
+            recalls[name] = QUERIES[name](spark, recall_dir).collect()[0].asDict()
+        except Exception as e:
+            recalls[name] = {"error": str(e)}
+        print(f"# recall {name}: {recalls[name]}", file=sys.stderr)
 
     print(
         json.dumps(

@@ -276,7 +276,8 @@ def minhash_dup_clusters(
 
     Similarity is distinct ``shingle_k``-gram Jaccard (verified exactly on
     every candidate — no LSH false positives; misses bounded by the band
-    schedule, recall-gated 1.0 in bench.py at the default schedule).
+    schedule, recall-gated 1.0 at the default schedule by the
+    ``minhash_recall_gate`` driver row).
 
     ``block_col`` (default None = corpus-wide, the RefinedWeb shape) scopes
     band buckets to the block, making this the semantic twin of
@@ -464,8 +465,8 @@ def simhash_dup_pairs(
     Band-completeness (pigeonhole): two sketches within Hamming d share at least
     one of the 64/prefix_bits aligned bands whenever d < 64/prefix_bits. The
     defaults (8 bands of 8 bits, max_hamming=6 < 8) therefore make the banded
-    candidate set COMPLETE — the output equals the exact Hamming-≤-6 pair set,
-    which the bench recall gate asserts as recall 1.0. Narrower bands trade
+    candidate set COMPLETE — the output equals the exact Hamming-≤-6 pair set
+    (``test_simhash_bands_complete_below_band_width``). Narrower bands trade
     candidate volume for the guarantee; with 4×16 bits the guarantee drops to
     d ≤ 3 (the round-1 configuration's documented gap). Buckets over
     ``band_cap`` members star-represent instead of going clique-quadratic

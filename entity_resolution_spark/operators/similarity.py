@@ -219,8 +219,8 @@ def lsh_ann_topk(
     E[hamming] = bits·θ/π, σ ≈ √(bits)/2: the default radius
     ``bits/2 − 1.6·√bits/2`` (115 at 256) admits ≈5% of random directions
     while catching ≥95% of cosine ≳ 0.3 neighbors — the recall/scan dial the
-    bench gate measures. Output schema matches :func:`brute_force_topk`
-    (rank may differ where recall < 1).
+    ``lsh_ann_recall_gate`` driver row measures. Output schema matches
+    :func:`brute_force_topk` (rank may differ where recall < 1).
     """
     import pandas as pd
 
@@ -620,7 +620,7 @@ def pq_ann_topk(
     independent of the corpus partitioning), and the final window ranks
     those by the exact value. Recall loss comes only from PQ distortion
     dropping a true neighbor below global ADC rank ``rerank``
-    (planted-partner gate in bench.py).
+    (the ``pq_ann_recall_gate`` planted-partner driver row).
 
     Probes are contract-small (collected + broadcast, like
     :func:`brute_force_topk` / :func:`ivf_ann_topk`)."""

@@ -590,8 +590,8 @@ def q_minhash_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_exact, n_hit, n_missed) of the banded+verified LSH pair set against
     the EXACT corpus-wide 3-gram-jaccard pair set at the same 0.5 threshold.
     The DuckDB oracle computes the exact set from string shingles and
-    asserts the perfect-recall counts (n_hit = n_exact, n_missed = 0) — the
-    bench's recall gate turned into a hash-compared driver row. Both engines
+    asserts the perfect-recall counts (n_hit = n_exact, n_missed = 0) as a
+    hash-compared driver row (bench.py reports it as recall). Both engines
     use the identical length-compensating shingle rule (docs shorter than k
     tokens contribute one whole-sequence shingle)."""
     d = _t(spark, sf_dir, "documents")
@@ -648,8 +648,8 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # neighbors sit near cosine ≈ 0.3-0.4 — barely above the random-direction
     # tail — so bucketed LSH either misses them or floods candidates
     # (round-2's schedule lost to brute force). The sketch screen admits ≈5%
-    # of the corpus to exact rerank (bench gate asserts recall ≥ 0.95 at
-    # sf0.01); radius is the recall/scan dial.
+    # of the corpus to exact rerank (lsh_ann_recall_gate asserts recall ≥
+    # 0.95 at sf0.01); radius is the recall/scan dial.
     return lsh_ann_topk(e, probes, k=5)
 
 
@@ -657,7 +657,7 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN: seeded spherical-k-means coarse cells over a
     deterministic corpus sample, corpus assigned to nearest cell, probes scan
     their n_probe nearest cells with exact rerank. Rows-only (float k-means);
-    recall is gated in bench.py on planted high-cosine partners — the
+    recall is gated by ivf_ann_recall_gate on planted high-cosine partners — the
     near-dup-retrieval regime coarse cells actually index. (This corpus is
     isotropic at cosine 0.3-0.5 where ANY cell index degenerates to
     recall ≈ scan fraction; the sketch path covers that regime.)"""
@@ -677,7 +677,7 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic (seeded sample-trained codebooks, fixed iterations,
     partitioning-independent candidate set) but float-iterative k-means —
     rows-only; brute-parity and planted-partner goldens in
-    tests/test_similarity.py, recall gate in bench.py."""
+    tests/test_similarity.py, recall gate in pq_ann_recall_gate."""
     from entity_resolution_spark.operators.similarity import pq_ann_topk
 
     e = _t(spark, sf_dir, "embeddings").select(
@@ -2554,10 +2554,10 @@ ORDER BY doc_id
 def q_lsh_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver row for the sign-sketch LSH ANN contract: the exact brute-force
     top-5 truth-set SIZE (SQL-certifiable) plus a boolean asserting recall ≥
-    0.95 against it — the bench gate (observed 0.99 at sf0.01) turned into a
-    hash-compared row. The truth size is the non-trivial integer: per probe
-    it is min(k, N−1) (self excluded), so the row also certifies that the
-    ANN output joins per-probe against a complete truth set."""
+    0.95 against it (observed 0.99 at sf0.01), as a hash-compared row. The
+    truth size is the non-trivial integer: per probe it is min(k, N−1) (self
+    excluded), so the row also certifies that the ANN output joins per-probe
+    against a complete truth set."""
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -2585,18 +2585,18 @@ SELECT CAST((SELECT count(*) FROM embeddings WHERE vec_id < 20)
 
 
 def _planted_partner_corpus(spark: SparkSession, sf_dir: str):
-    """The bench's deterministic planted-partner construction (bench.py
-    recall_gates): for every embedding with vec_id < 100, union a partner at
-    cosine ≈ 0.995 (5% seeded noise) under id+1_000_000. Returns (corpus,
-    base_ids). Near-dup retrieval is the regime cell/quantizer ANN indexes
-    exist for — the sf tables themselves are isotropic at cosine 0.3-0.5
-    where any cell index degenerates to recall ≈ scan fraction."""
+    """Deterministic planted-partner construction: for every embedding with
+    vec_id < 100, union a partner at cosine ≈ 0.995 (5% seeded noise, drawn
+    in vec_id order) under id+1_000_000. Returns (corpus, base_ids).
+    Near-dup retrieval is the regime cell/quantizer ANN indexes exist for —
+    the sf tables themselves are isotropic at cosine 0.3-0.5 where any cell
+    index degenerates to recall ≈ scan fraction."""
     import numpy as _np
 
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    base = e.where(F.col("vec_id") < 100).collect()
+    base = e.where(F.col("vec_id") < 100).orderBy("vec_id").collect()
     rng = _np.random.RandomState(0xC0FFEE)
     planted = [
         (
@@ -3135,7 +3135,9 @@ ORACLES: dict[str, str] = {
     "top_terms_gate": SQL_TOP_TERMS_GATE,
     # minhash_near_dup / simhash_near_dup / lsh_ann_topk / er_resolve_docs:
     # hash-sketch and pipeline operators — not SQL-expressible, rows-only checks
-    # (each is recall/equivalence-gated against its exact counterpart in bench.py).
+    # (minhash/lsh recall is gated by minhash_recall_gate / lsh_ann_recall_gate,
+    # simhash band completeness by test_simhash_bands_complete_below_band_width,
+    # the pipeline by er_resolve_f1_docs).
     # kmeans / spectral / incremental / colour_split / top_terms / gcn /
     # acceptance_distribution: iterative, eigen, greedy or RNG-seeded per-block
     # algorithms — not SQL-expressible; each carries reference-golden pytest

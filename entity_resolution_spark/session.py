@@ -45,7 +45,7 @@ def get_spark(
         # Finer AQE granularity than the 64m/256m defaults: the pair join's
         # output rows are WIDE (two tfidf term/weight arrays ride into the
         # scoring kernel), so a "small" partition by byte count is a lot of
-        # Arrow-kernel compute. Event-log diagnosis (tools/diag_scaling.py,
+        # Arrow-kernel compute. Event-log diagnosis (per-stage timeline,
         # 703k-file corpus @ local[16]) showed one 28s straggler task in a
         # 128-partition scoring stage — AQE never split it because the skewed
         # partition was < 256m. 32m advisory + factor-2 skew split cut the

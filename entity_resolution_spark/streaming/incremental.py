@@ -412,12 +412,14 @@ def explode_doc_lines(
     """(id, text[, event_time]) → (doc_id, pos, line) rows, one per
     non-empty TRIMMED line (the same line rule as
     ``operators.cleaning.corpus_line_dedup``: whitespace-only lines always
-    drop; the ORIGINAL untrimmed line is carried for reassembly).
-    Stateless projection — works identically on a stream or a batch frame."""
+    drop; the ORIGINAL untrimmed line is carried for reassembly). ``doc_id``
+    keeps the id's type, so the (doc_id, pos) order matches the batch rule's
+    (numeric ids compare as numbers: 9 before 10). Stateless projection —
+    works identically on a stream or a batch frame."""
     keep = [c for c in docs.columns if c == "event_time"]
     return (
         docs.select(
-            F.col(id_col).cast("string").alias("doc_id"),
+            F.col(id_col).alias("doc_id"),
             F.posexplode(
                 F.split(F.coalesce(F.col(text_col).cast("string"), F.lit("")), "\n")
             ).alias("pos", "line"),
@@ -458,7 +460,7 @@ def stream_line_dedup(lines_stream: DataFrame) -> DataFrame:
 
     out_schema = T.StructType(
         [
-            T.StructField("doc_id", T.StringType()),
+            T.StructField("doc_id", lines_stream.schema["doc_id"].dataType),
             T.StructField("pos", T.IntegerType()),
             T.StructField("line", T.StringType()),
         ]

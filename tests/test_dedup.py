@@ -58,6 +58,44 @@ def test_simhash_near_dups(spark):
     assert got[(1, 3)] <= 16
 
 
+def test_simhash_bands_complete_below_band_width(spark):
+    """The 8x8-bit band schedule is complete for Hamming d < 8: on a fixture
+    under band_cap, simhash_dup_pairs(max_hamming=6) equals the exact
+    cross-join over the same simhash64/simhash_fold sketches."""
+    from entity_resolution_spark.functions import text as TX
+    from entity_resolution_spark.functions.hashing import hamming64, simhash64, simhash_fold
+
+    # per base text: two copies plus variants with 1..10 of its 64 tokens
+    # replaced, so pair sketch distances span Hamming 0-10 and beyond
+    docs = []
+    for fam in range(3):
+        base = [f"b{fam}w{i}" for i in range(64)]
+        docs.append((fam * 100 + 99, " ".join(base), "en"))
+        for k in range(11):
+            toks = [f"b{fam}v{k}x{j}" for j in range(k)] + base[k:]
+            docs.append((fam * 100 + k, " ".join(toks), "en"))
+    d = spark.createDataFrame(docs, SCHEMA)
+    sketch = (
+        d.select(F.col("doc_id").alias("_id"),
+                 F.explode(TX.distinct_tokens(F.col("text"))).alias("_t"))
+        .groupBy("_id").agg(*simhash64(F.col("_t")))
+        .select("_id", simhash_fold().alias("_sim"))
+    )
+    a = sketch.select(F.col("_id").alias("id_a"), F.col("_sim").alias("_sa"))
+    b = sketch.select(F.col("_id").alias("id_b"), F.col("_sim").alias("_sb"))
+    all_pairs = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", hamming64(F.col("_sa"), F.col("_sb")).alias("hamming"))
+        .collect()
+    }
+    assert set(range(11)) <= set(all_pairs.values())  # the fixture spans d = 0..10
+    exact = {p: h for p, h in all_pairs.items() if h <= 6}
+    got = {(r["id_a"], r["id_b"]): r["hamming"]
+           for r in simhash_dup_pairs(d, max_hamming=6).collect()}
+    assert got == exact
+
+
 def test_crowded_band_is_linear_not_quadratic(spark):
     """A 1k-member boilerplate family (identical text) must NOT emit the ~500k-pair
     clique from its shared band buckets: over band_cap the bucket star-represents,

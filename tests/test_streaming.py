@@ -468,6 +468,9 @@ def test_stream_line_dedup_batch_parity(spark, tmp_path):
         (2, "shared header\nunique b\n   \nshared footer"),
         (3, "unique c\nshared header"),
         (4, "unique a"),  # dup of doc 1's middle line, later id
+        # ids across a digit boundary: 9 keeps the line in (id, pos) order
+        (9, "shared line\nnine only"),
+        (10, "shared line\nten only"),
     ]
     bdf = spark.createDataFrame(docs, "doc_id long, text string")
     want = {
@@ -481,9 +484,7 @@ def test_stream_line_dedup_batch_parity(spark, tmp_path):
         text_col="text",
         id_col="doc_id",
     ).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(
-        "doc_id string, pos int, line string, event_time timestamp"
-    ).parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
     kept = stream_line_dedup(stream)
     q = (
         kept.writeStream.outputMode("append")

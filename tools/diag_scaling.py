@@ -1,15 +1,17 @@
-"""Event-log scaling diagnosis: where does wall time go at N cores?
+"""Per-layer profile of one resolve run at N cores.
 
-Runs the full pipeline once at --cores on a pre-materialized corpus with
-Spark event logging on, then parses the event log into a stage timeline:
+Runs ``plans.pipeline.resolve`` on a parquet corpus of repo files under the
+benchmark's layer tracer (``perfbench/trace_spans.py``), with the same
+uncompressed, non-rolling event log that ``perfbench/child.py`` sets, and
+prints ``layer_metrics`` as one JSON object: per layer wall, executor CPU, GC,
+Python-worker time, shuffle, spill, rows, jobs, skew and driver-only time, plus
+the run's total task CPU. The layers' ``cpu_s`` (``unattributed`` included)
+sum to ``task_cpu_s``.
 
-- per stage: callsite, #tasks, wall span, sum(task time), max task (skew),
-  effective parallelism = sum(task)/span;
-- timeline gaps with NO running stage = driver-only time (planning, codegen,
-  broadcast builds, py4j round-trips) — the serial floor that caps N->4N
-  scaling (Amdahl).
+To compare core counts, run it twice, e.g. ``--cores 1`` under
+``taskset -c 0`` and ``--cores 4``.
 
-Usage: python tools/diag_scaling.py --cores 16 --corpus /tmp/scaling_corpus_240000
+Usage: python tools/diag_scaling.py --cores 4 --corpus DIR [--eventlog-dir DIR]
 """
 
 from __future__ import annotations
@@ -18,185 +20,46 @@ import argparse
 import json
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def run_job(
-    cores: int, corpus: str, evdir: str, shuffle_mult: int = 2, aqe_tune: bool = False
-) -> float:
-    from entity_resolution_spark.plans.pipeline import PipelineConfig, resolve
-    from entity_resolution_spark.session import get_spark
-
-    conf = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": evdir,
-    }
-    if aqe_tune:
-        # finer AQE granularity: split skewed join partitions well below the
-        # 256m default and stop coalescing back to coarse partitions — the
-        # scoring stage straggler is a skewed pair-join partition
-        conf.update({
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64m",
-        })
-    spark = get_spark(
-        "diag",
-        master=f"local[{cores}]",
-        shuffle_partitions=max(cores * shuffle_mult, 8),
-        extra_conf=conf,
-    )
-    repo_files = spark.read.parquet(corpus)
-    t0 = time.monotonic()
-    out = resolve(spark, repo_files, PipelineConfig(), eager=False)
-    out["clusters"].select("cluster_id").distinct().count()
-    wall = time.monotonic() - t0
-    spark.stop()
-    return wall
-
-
-def parse_eventlog(evdir: str) -> dict:
-    path = max(
-        (os.path.join(evdir, f) for f in os.listdir(evdir) if not f.endswith(".inprogress")),
-        key=os.path.getmtime,
-    )
-    # Spark 4 event logs are rolling directories (eventlog_v2_*/events_*)
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path) if f.startswith("events_")
-        )
-    else:
-        files = [path]
-
-    def _lines():
-        for f in files:
-            if f.endswith(".zstd"):
-                import io
-
-                import pyarrow as pa
-
-                with pa.input_stream(f, compression="zstd") as fh:
-                    yield from io.TextIOWrapper(fh, encoding="utf-8")
-            else:
-                yield from open(f)
-
-    stages: dict[tuple, dict] = {}
-    app_start = app_end = None
-    for line in _lines():
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        k = ev.get("Event")
-        if k == "SparkListenerApplicationStart":
-            app_start = ev["Timestamp"]
-        elif k == "SparkListenerApplicationEnd":
-            app_end = ev["Timestamp"]
-        elif k == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            key = (si["Stage ID"], si["Stage Attempt ID"])
-            st = stages.setdefault(key, {"task_sum_ms": 0, "task_max_ms": 0})
-            details = si.get("Details", "")
-            frame = next(
-                (
-                    ln.strip()
-                    for ln in details.split("\n")
-                    if "/entity_resolution_spark/" in ln
-                ),
-                "",
-            )
-            # distinctive physical-operator scopes (python/arrow stages stand out)
-            scopes = []
-            for r in si.get("RDD Info", []):
-                sc = r.get("Scope")
-                if sc:
-                    try:
-                        nm = json.loads(sc).get("name", "")
-                    except json.JSONDecodeError:
-                        nm = ""
-                    if nm and nm not in scopes:
-                        scopes.append(nm)
-            scope_s = ",".join(
-                s for s in scopes
-                if any(t in s for t in (
-                    "Arrow", "Python", "Aggregate", "Join", "Window", "Scan",
-                    "Checkpoint", "Generate",
-                ))
-            )[:60]
-            st.update(
-                name=(si["Stage Name"].split(" at ")[0] + " [" + scope_s + "] "
-                      + frame)[:150],
-                n_tasks=si["Number of Tasks"],
-                submit=si.get("Submission Time"),
-                complete=si.get("Completion Time"),
-            )
-        elif k == "SparkListenerTaskEnd":
-            key = (ev["Stage ID"], ev["Stage Attempt ID"])
-            ti = ev.get("Task Info", {})
-            dur = (ti.get("Finish Time", 0) or 0) - (ti.get("Launch Time", 0) or 0)
-            st = stages.setdefault(
-                key,
-                {"name": "?", "n_tasks": 0, "submit": None, "complete": None,
-                 "task_sum_ms": 0, "task_max_ms": 0},
-            )
-            st["task_sum_ms"] += dur
-            st["task_max_ms"] = max(st["task_max_ms"], dur)
-    # busy intervals -> gaps
-    iv = sorted(
-        (s["submit"], s["complete"])
-        for s in stages.values()
-        if s["submit"] and s["complete"]
-    )
-    merged = []
-    for a, b in iv:
-        if merged and a <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], b)
-        else:
-            merged.append([a, b])
-    busy = sum(b - a for a, b in merged) / 1000.0
-    span = ((app_end or merged[-1][1]) - (app_start or merged[0][0])) / 1000.0
-    gaps = span - busy
-    return {"stages": stages, "busy_s": busy, "gap_s": gaps, "span_s": span}
+# the Python workers Spark forks import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=int, default=16)
-    ap.add_argument("--corpus", default="/tmp/scaling_corpus_240000")
-    ap.add_argument("--evdir", default=None)
-    ap.add_argument("--parse-only", action="store_true")
-    ap.add_argument("--shuffle-mult", type=int, default=2)
-    ap.add_argument("--aqe-tune", action="store_true")
+    ap.add_argument("--cores", type=int, default=os.cpu_count())
+    ap.add_argument("--corpus", required=True, help="parquet dir of repo files")
+    ap.add_argument("--eventlog-dir", default=None, help="default: a new temp dir")
     args = ap.parse_args()
-    evdir = args.evdir or f"/tmp/evlog_{args.cores}"
+
+    from entity_resolution_spark.plans import pipeline
+    from entity_resolution_spark.session import get_spark
+    from perfbench.trace_spans import Tracer, layer_metrics
+
+    evdir = os.path.abspath(args.eventlog_dir or tempfile.mkdtemp(prefix="eventlog_"))
     os.makedirs(evdir, exist_ok=True)
-    if not args.parse_only:
-        wall = run_job(args.cores, args.corpus, evdir, args.shuffle_mult, args.aqe_tune)
-        print(f"wall={wall:.1f}s", file=sys.stderr)
-    rep = parse_eventlog(evdir)
-    print(
-        f"app span {rep['span_s']:.1f}s  stage-busy {rep['busy_s']:.1f}s  "
-        f"driver-gaps {rep['gap_s']:.1f}s"
-    )
-    rows = sorted(
-        rep["stages"].values(),
-        key=lambda s: -((s["complete"] or 0) - (s["submit"] or 0)),
-    )
-    print(f"{'span_s':>8} {'tasks':>6} {'sum_s':>9} {'max_s':>7} {'par':>5}  name")
-    for s in rows[:40]:
-        if not (s["submit"] and s["complete"]):
-            continue
-        spn = (s["complete"] - s["submit"]) / 1000.0
-        if spn < 0.4:
-            continue
-        par = (s["task_sum_ms"] / 1000.0) / spn if spn else 0.0
-        print(
-            f"{spn:8.1f} {s['n_tasks']:6d} {s['task_sum_ms']/1000.0:9.1f} "
-            f"{s['task_max_ms']/1000.0:7.1f} {par:5.1f}  {s['name']}"
-        )
+    spark = get_spark("diag", master=f"local[{args.cores}]", extra_conf={
+        "spark.ui.showConsoleProgress": "false",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + evdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    })
+    tracer = Tracer(spark, "resolve")
+    tracer.install()
+    t0 = time.monotonic()
+    pipeline.resolve(spark, spark.read.parquet(args.corpus))
+    job_s = time.monotonic() - t0
+    trace = tracer.finish()
+    event_log = os.path.join(evdir, spark.sparkContext.applicationId)
+    spark.stop()  # closes the event log
+    out = {"cores": args.cores, "job_s": round(job_s, 3), "event_log": event_log,
+           **layer_metrics(event_log, trace)}
+    print(json.dumps(out, indent=1))
     return 0
 
 
